@@ -14,7 +14,19 @@ Differences from the reference, on purpose:
 - the fact is written partitioned by ``playlist_id`` so downstream
   per-playlist reads prune partitions at scale;
 - staging frames are cached: dims and the fact reuse them within the
-  run (the reference re-reads parquet per model).
+  run (the reference re-reads parquet per model), and they are
+  unpersisted once the gold writes finish;
+- a stage's independent table landings run concurrently (four each in
+  bronze, silver and gold, and the per-table merges of an incremental
+  refresh), where the reference's tasks write one table after another.
+  A stage raises, and its retry starts, only after every landing of
+  that attempt has finished (``land_concurrently``);
+- every re-read of a lake table passes its declared schema
+  (``schemas.BRONZE_TABLES`` / ``SILVER_TABLES`` / ``GOLD_TABLES``)
+  instead of inferring one from the files it just wrote. That saves a
+  Spark job per read and keeps partition values as written: a string
+  ``playlist_id`` such as ``"0012"`` would otherwise be inferred back
+  as the int 12.
 """
 
 from __future__ import annotations
@@ -22,9 +34,11 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 T = TypeVar("T")
 
@@ -37,6 +51,12 @@ from ..operators.quality import (
 )
 from ..operators.shred import shred
 from ..operators.staging import silver_projection, stage
+from ..schemas import (
+    BRONZE_TABLES,
+    FACT_PARTITION_COL,
+    GOLD_TABLES,
+    SILVER_TABLES,
+)
 from ..sources.readers import read_raw_playlists
 from ..sources.sinks import write_parquet, write_partitioned
 
@@ -73,6 +93,25 @@ def run_with_retries(
     raise AssertionError("unreachable")
 
 
+def land_concurrently(writes: list[Callable[[], None]]) -> None:
+    """Run independent table landings as concurrent Spark jobs from a
+    small driver pool. Returns, or raises the first failure in
+    submission order, only once EVERY landing has finished — a retry
+    must never overlap a landing still running from the failed
+    attempt."""
+    with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
+        futures = [pool.submit(w) for w in writes]
+    # leaving the block waited for all of them
+    for f in futures:
+        f.result()
+
+
+def _read(
+    spark: SparkSession, out_root: str, layer: str, name: str, schema: StructType
+) -> DataFrame:
+    return spark.read.schema(schema).parquet(os.path.join(out_root, layer, name))
+
+
 def run_medallion(
     spark: SparkSession,
     raw_json_path: str,
@@ -100,50 +139,50 @@ def run_medallion(
     ``retry_delay_s`` defaults to 0 so library callers aren't stalled
     by default, pass 300 for strict parity)."""
 
-    def _bronze() -> dict[str, DataFrame]:
-        raw = read_raw_playlists(spark, raw_json_path)
-        bronze = shred(raw)
-        for name, df in bronze.items():
-            write_parquet(df, os.path.join(out_root, "bronze", name))
-        return bronze
-
-    bronze = run_with_retries(
-        _bronze, "bronze", retries, retry_delay_s, sleeper
-    )
-
-    def _silver() -> dict[str, DataFrame]:
-        silver = {}
-        for name in bronze:
-            bdf = spark.read.parquet(os.path.join(out_root, "bronze", name))
-            sdf = silver_projection(bdf, name)
-            write_parquet(sdf, os.path.join(out_root, "silver", name))
-            silver[name] = spark.read.parquet(
-                os.path.join(out_root, "silver", name)
-            )
-        return silver
-
-    silver = run_with_retries(
-        _silver, "silver", retries, retry_delay_s, sleeper
-    )
-
-    def _gold() -> dict[str, DataFrame]:
-        stg = {name: df.cache() for name, df in stage(silver).items()}
-        gold_frames = gold(stg)
-        for name, df in gold_frames.items():
-            path = os.path.join(out_root, "gold", name)
+    def _land(layer: str, frames: dict[str, DataFrame]) -> None:
+        def write(name: str, df: DataFrame) -> Callable[[], None]:
+            path = os.path.join(out_root, layer, name)
             if name == "fact_playlist_tracks":
-                write_partitioned(df, path, ["playlist_id"])
-            else:
-                write_parquet(df, path)
-        return gold_frames
+                return lambda: write_partitioned(df, path, [FACT_PARTITION_COL])
+            return lambda: write_parquet(df, path)
 
-    gold_frames = run_with_retries(
-        _gold, "gold", gold_retries, retry_delay_s, sleeper
-    )
+        land_concurrently([write(name, df) for name, df in frames.items()])
+
+    def _bronze() -> None:
+        _land("bronze", shred(read_raw_playlists(spark, raw_json_path)))
+
+    run_with_retries(_bronze, "bronze", retries, retry_delay_s, sleeper)
+
+    def _silver() -> None:
+        _land(
+            "silver",
+            {
+                name: silver_projection(
+                    _read(spark, out_root, "bronze", name, schema), name
+                )
+                for name, schema in BRONZE_TABLES.items()
+            },
+        )
+
+    run_with_retries(_silver, "silver", retries, retry_delay_s, sleeper)
+    silver = {
+        name: _read(spark, out_root, "silver", name, schema)
+        for name, schema in SILVER_TABLES.items()
+    }
+
+    def _gold() -> None:
+        stg = {name: df.cache() for name, df in stage(silver).items()}
+        try:
+            _land("gold", gold(stg))
+        finally:
+            for df in stg.values():
+                df.unpersist()
+
+    run_with_retries(_gold, "gold", gold_retries, retry_delay_s, sleeper)
 
     landed = {
-        name: spark.read.parquet(os.path.join(out_root, "gold", name))
-        for name in gold_frames
+        name: _read(spark, out_root, "gold", name, schema)
+        for name, schema in GOLD_TABLES.items()
     }
     if validate:
         expect_all(gold_contracts(landed))
@@ -185,18 +224,24 @@ def refresh_gold_incremental(
     PK/FK contract fails exactly like a full rebuild would."""
     from ..sources.sinks import upsert_partitioned, upsert_unpartitioned
 
-    for name, batch in updates.items():
+    unknown = sorted(set(updates) - set(GOLD_TABLES))
+    if unknown:
+        raise ValueError(f"unknown gold table {unknown[0]!r}")
+
+    def merge(name: str, batch: DataFrame) -> Callable[[], None]:
         path = os.path.join(out_root, "gold", name)
+        schema = GOLD_TABLES[name]
         if name == "fact_playlist_tracks":
-            upsert_partitioned(batch, path, _FACT_KEYS, "playlist_id")
-        elif name in _DIM_KEYS:
-            upsert_unpartitioned(batch, path, [_DIM_KEYS[name]])
-        else:
-            raise ValueError(f"unknown gold table {name!r}")
+            return lambda: upsert_partitioned(
+                batch, path, _FACT_KEYS, FACT_PARTITION_COL, schema
+            )
+        return lambda: upsert_unpartitioned(batch, path, [_DIM_KEYS[name]], schema)
+
+    land_concurrently([merge(name, batch) for name, batch in updates.items()])
 
     landed = {
-        name: spark.read.parquet(os.path.join(out_root, "gold", name))
-        for name in list(_DIM_KEYS) + ["fact_playlist_tracks"]
+        name: _read(spark, out_root, "gold", name, schema)
+        for name, schema in GOLD_TABLES.items()
     }
     if validate:
         expect_all(gold_contracts(landed))

@@ -5,7 +5,8 @@ Two families (FIXTURES.md):
 A. Spotify-domain schemas mirroring the reference's medallion stages —
    raw nested playlist JSON, all-string bronze/silver tables
    (reference creates every bronze column as TEXT:
-   ``ingestion/ingestion/bronze/bronze.py:202-206``), and typed gold.
+   ``ingestion/ingestion/bronze/bronze.py:202-206``), and typed gold —
+   the read schemas of every lake table the medallion lands.
 B. The driver's TPC-H-ish testdata tables (TESTDATA.md), declared so
    reads never rely on runtime inference.
 """
@@ -153,6 +154,61 @@ SILVER_COLUMNS = {
     ],
     "albums": ["album_id", "name", "release_date", "total_tracks", "track_id"],
     "artists": ["artist_id", "name", "track_id"],
+}
+
+SILVER_TABLES = {
+    name: T.StructType([BRONZE_TABLES[name][c] for c in cols])
+    for name, cols in SILVER_COLUMNS.items()
+}
+
+# Gold: the typed dims + fact (operators/core.py over operators/staging.py
+# casts), declared so re-reads of the landed lake never infer a schema.
+# The fact is written partitioned by ``FACT_PARTITION_COL`` and Spark
+# reads a partition column back LAST, so it is declared last here; a
+# partition value is then read as written ("0012" stays a string, where
+# inference would turn it into the int 12).
+FACT_PARTITION_COL = "playlist_id"
+GOLD_TABLES = {
+    "dim_playlists": T.StructType(
+        [
+            T.StructField("playlist_id", T.StringType()),
+            T.StructField("playlist_name", T.StringType()),
+            T.StructField("playlist_description", T.StringType()),
+            T.StructField("playlist_owner_id", T.StringType()),
+            T.StructField("playlist_followers", T.IntegerType()),
+            T.StructField("playlist_public", T.BooleanType()),
+        ]
+    ),
+    "dim_albums": T.StructType(
+        [
+            T.StructField("album_id", T.StringType()),
+            T.StructField("album_name", T.StringType()),
+            T.StructField("album_release_date", T.DateType()),
+            T.StructField("album_total_tracks", T.IntegerType()),
+        ]
+    ),
+    "dim_artists": T.StructType(
+        [
+            T.StructField("artist_id", T.StringType()),
+            T.StructField("artist_name", T.StringType()),
+        ]
+    ),
+    "fact_playlist_tracks": T.StructType(
+        [
+            T.StructField("track_id", T.StringType()),
+            T.StructField("track_name", T.StringType()),
+            T.StructField("track_number", T.IntegerType()),
+            T.StructField("track_duration_ms", T.IntegerType()),
+            T.StructField("track_popularity", T.IntegerType()),
+            T.StructField("track_explicit", T.BooleanType()),
+            T.StructField("album_release_date", T.DateType()),
+            T.StructField("album_name", T.StringType()),
+            T.StructField("album_id", T.StringType()),
+            T.StructField("artist_name", T.StringType()),
+            T.StructField("artist_id", T.StringType()),
+            T.StructField(FACT_PARTITION_COL, T.StringType()),
+        ]
+    ),
 }
 
 # ---------------------------------------------------------------------------

@@ -15,6 +15,8 @@ the end of the gold build.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
 from ..operators.lineage import cut_lineage_eager
 
 
@@ -50,6 +52,7 @@ def upsert_partitioned(
     path: str,
     keys: list[str],
     partition_col: str,
+    schema: StructType,
 ) -> None:
     """MERGE-shaped upsert into a directory-partitioned parquet table:
     rewrite ONLY the partitions the update batch touches, keeping the
@@ -66,7 +69,16 @@ def upsert_partitioned(
        desc) = 1`` — update wins per key, untouched keys survive;
     3. write with ``partitionOverwriteMode=dynamic`` so mode=overwrite
        replaces only partitions present in the merged frame — every
-       other partition's files are untouched on disk.
+       other partition's files are untouched on disk. The mode is an
+       option of this one write, never a session setting: a plain
+       overwrite running concurrently must still replace its whole
+       table.
+
+    The target is read with the caller's ``schema`` (partition column
+    last, as Spark reads it back), not an inferred one: inference costs
+    a job per read, and it would read a string partition value such as
+    ``"0012"`` back as the int 12 — the merge would then land a second
+    ``playlist_id=12`` directory beside the original.
 
     The merged frame is localCheckpoint-ed before the write: the
     output path is also the input path, and cutting lineage to the
@@ -77,7 +89,7 @@ def upsert_partitioned(
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    target = spark.read.parquet(path)
+    target = spark.read.schema(schema).parquet(path)
     touched = df.select(partition_col).distinct()
     existing = target.join(F.broadcast(touched), partition_col, "left_semi")
     merged = (
@@ -93,24 +105,27 @@ def upsert_partitioned(
         .drop("__batch", "__rn")
         .transform(cut_lineage_eager)
     )
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
-def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
+def upsert_unpartitioned(
+    df: DataFrame, path: str, keys: list[str], schema: StructType
+) -> None:
     """Key-window upsert for small unpartitioned tables (gold dims):
     same latest-version-per-key merge, full-file rewrite — a dim is
     broadcast-scale by definition, so rewriting it is cheaper than
-    maintaining partitions on it."""
+    maintaining partitions on it. The target is read with the caller's
+    ``schema``, as in ``upsert_partitioned``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    target = spark.read.parquet(path)
+    target = spark.read.schema(schema).parquet(path)
     merged = (
         target.withColumn("__batch", F.lit(0))
         .unionByName(df.withColumn("__batch", F.lit(1)))

@@ -92,9 +92,9 @@ def _playlist_items() -> list[dict]:
     return items
 
 
-def _write_fixture(path: str, items: list[dict]) -> str:
+def _write_fixture(path: str, items: list[dict], playlist_id: str = "PL1") -> str:
     playlist = {
-        "id": "PL1",
+        "id": playlist_id,
         "name": "Fixture Playlist",
         "description": "golden medallion fixture",
         "owner": {"id": "owner-1"},
@@ -359,3 +359,173 @@ def test_incremental_gold_refresh_upserts_only_touched_partitions(
 
     with _pytest.raises(ValueError, match="playlist_id_references"):
         refresh_gold_incremental(spark, lake, {"fact_playlist_tracks": bad})
+
+
+def test_string_partition_key_survives_rebuild_and_upsert(spark, tmp_path):
+    """A playlist id that looks like a number ("0012") lands, re-reads
+    and merges as the string it is. Inferring the fact's schema reads
+    the partition value back as the int 12, and an upsert of that
+    playlist then lands a second ``playlist_id=12`` directory holding a
+    duplicate of the updated row."""
+    from pyspark.sql import functions as F
+
+    from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
+
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items(), "0012")
+    lake = str(tmp_path / "lake")
+    fact = run_medallion(spark, raw, lake)["fact_playlist_tracks"]
+    assert isinstance(fact.schema["playlist_id"].dataType, T.StringType)
+    assert [r.playlist_id for r in fact.select("playlist_id").distinct().collect()] == [
+        "0012"
+    ]
+
+    upd = (
+        fact.filter(F.col("track_number") == 1)
+        .withColumn("playlist_id", F.lit("0012"))
+        .withColumn("track_name", F.lit("UPDATED TITLE"))
+    )
+    fact = refresh_gold_incremental(spark, lake, {"fact_playlist_tracks": upd})[
+        "fact_playlist_tracks"
+    ]
+    fact_dir = os.path.join(lake, "gold", "fact_playlist_tracks")
+    assert sorted(d for d in os.listdir(fact_dir) if "=" in d) == ["playlist_id=0012"]
+    assert fact.count() == N_TRACKS
+    updated = fact.filter(F.col("track_name") == "UPDATED TITLE").collect()
+    assert [(r.playlist_id, r.track_number) for r in updated] == [("0012", 1)]
+
+
+def test_run_medallion_releases_staging_cache(spark, tmp_path):
+    """The gold stage caches its staging frames for the dims and the
+    fact to share, and unpersists them once the gold writes finish.
+    Compared by RDD id rather than count: the context cleaner may drop
+    RDDs that earlier tests persisted while this one runs."""
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    gold = run_medallion(spark, raw, str(tmp_path / "lake"))
+    assert gold["fact_playlist_tracks"].count() == N_TRACKS
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_failed_landing_retries_only_after_its_attempt_drains(
+    spark, tmp_path, monkeypatch
+):
+    """A stage's landings run concurrently. When one fails, the stage
+    raises, and its retry starts, only once every other landing of that
+    attempt has finished; the retried run then converges to the
+    goldens."""
+    import threading
+    import time
+
+    import spotify_etl_aws_spark.plans.medallion as M
+
+    real_write = M.write_parquet
+    lock = threading.Lock()
+    attempt = 0
+    in_flight: set[str] = set()
+    at_retry: list[set[str]] = []
+    done: list[tuple[int, str, float, float]] = []  # (attempt, path, start, end)
+    failed_at: list[float] = []
+
+    def tracked_write(df, path, *args):
+        with lock:
+            mine = attempt
+            in_flight.add(path)
+        start = time.monotonic()
+        try:
+            if "/silver/" in path and mine == 0:
+                if path.endswith("albums"):
+                    failed_at.append(time.monotonic())
+                    raise OSError("transient landing")
+                # keep the siblings running past the failure
+                time.sleep(0.5)
+            return real_write(df, path, *args)
+        finally:
+            with lock:
+                in_flight.discard(path)
+                done.append((mine, path, start, time.monotonic()))
+
+    def sleeper(_delay: float) -> None:
+        nonlocal attempt
+        with lock:
+            at_retry.append(set(in_flight))
+            attempt += 1
+
+    monkeypatch.setattr(M, "write_parquet", tracked_write)
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    gold = run_medallion(spark, raw, str(tmp_path / "lake"), sleeper=sleeper)
+
+    assert at_retry == [set()]  # one retry, nothing of attempt 0 running
+    first = [d for d in done if d[0] == 0 and "/silver/" in d[1]]
+    retried = [d for d in done if d[0] == 1]
+    # the failure happened while sibling landings were still running ...
+    assert any(
+        s < failed_at[0] < e for _, p, s, e in first if not p.endswith("albums")
+    )
+    # ... and the retry's landings all started after they finished
+    assert max(e for *_, e in first) <= min(s for _, _, s, _ in retried)
+    assert {os.path.basename(p) for _, p, _, _ in retried if "/silver/" in p} == {
+        "playlists",
+        "tracks",
+        "albums",
+        "artists",
+    }
+    assert gold["dim_albums"].count() == N_ALBUMS
+    assert gold["dim_artists"].count() == N_ARTISTS
+    assert gold["fact_playlist_tracks"].count() == N_TRACKS
+
+
+def _fixture_bronze(spark, tmp_path) -> dict:
+    from spotify_etl_aws_spark.operators.shred import shred
+    from spotify_etl_aws_spark.sources.readers import read_raw_playlists
+
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    return shred(read_raw_playlists(spark, raw))
+
+
+def _fields(schema: T.StructType) -> list[tuple[str, T.DataType]]:
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_shred_output_matches_declared_bronze_schemas(spark, tmp_path):
+    from spotify_etl_aws_spark.schemas import BRONZE_TABLES
+
+    bronze = _fixture_bronze(spark, tmp_path)
+    assert list(bronze) == list(BRONZE_TABLES)
+    for name, df in bronze.items():
+        assert _fields(df.schema) == _fields(BRONZE_TABLES[name]), name
+
+
+def test_gold_models_match_declared_gold_schemas(spark, tmp_path):
+    """The gold models' output is what ``GOLD_TABLES`` declares for the
+    re-reads (names, order, types), with the fact's partition column
+    moved last as Spark reads it back; a model change cannot drift
+    from the read schema unnoticed."""
+    from spotify_etl_aws_spark.operators.core import gold
+    from spotify_etl_aws_spark.operators.staging import silver_projection, stage
+    from spotify_etl_aws_spark.schemas import (
+        FACT_PARTITION_COL,
+        GOLD_TABLES,
+        SILVER_TABLES,
+    )
+
+    bronze = _fixture_bronze(spark, tmp_path)
+    silver = {name: silver_projection(df, name) for name, df in bronze.items()}
+    for name, df in silver.items():
+        assert _fields(df.schema) == _fields(SILVER_TABLES[name]), name
+    built = gold(stage(silver))
+    assert list(built) == list(GOLD_TABLES)
+    for name, df in built.items():
+        fields = _fields(df.schema)
+        if name == "fact_playlist_tracks":
+            fields = [f for f in fields if f[0] != FACT_PARTITION_COL] + [
+                f for f in fields if f[0] == FACT_PARTITION_COL
+            ]
+        assert fields == _fields(GOLD_TABLES[name]), name
+
+
+def test_session_sizes_partition_discovery_to_cores(spark):
+    from spotify_etl_aws_spark.session import default_parallelism
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    assert spark.conf.get(key) == str(default_parallelism())

@@ -14,6 +14,7 @@ from spotify_etl_aws_spark.sources.readers import load_table
 from spotify_etl_aws_spark.sources.rest import RestClient, ingest_playlists
 from spotify_etl_aws_spark.sources.sinks import (
     save_as_table,
+    upsert_partitioned,
     write_json,
     write_parquet,
     write_partitioned,
@@ -435,3 +436,112 @@ def test_commit_epoch_replay_crash_retracts_marker(spark, tmp_path):
     after = os.path.getmtime(os.path.join(root, "_epoch_commits", "0"))
     assert after > before  # marker was retracted and re-created
     assert committed_epochs(root) == [0]
+
+
+# a partitioned table's declared read schema: partition column last
+_KEYED = "track_number int, track_name string, playlist_id string"
+
+
+def _partition_dirs(path: str) -> list[str]:
+    return sorted(d for d in os.listdir(path) if "=" in d)
+
+
+def test_upsert_partitioned_keeps_string_partition_key(spark, tmp_path):
+    """A string partition value that looks like a number ("0012") must
+    survive the merge as written. Inferring the target's schema reads it
+    back as the int 12: the merge then lands a second ``playlist_id=12``
+    directory and the updated row exists twice."""
+    path = str(tmp_path / "fact")
+    rows = [(n, f"track {n}", "0012") for n in (1, 2, 3)]
+    write_partitioned(spark.createDataFrame(rows, _KEYED), path, ["playlist_id"])
+    upd = spark.createDataFrame([(2, "UPDATED", "0012")], _KEYED)
+
+    schema = spark.createDataFrame([], _KEYED).schema
+    upsert_partitioned(upd, path, ["playlist_id", "track_number"], "playlist_id", schema)
+
+    assert _partition_dirs(path) == ["playlist_id=0012"]
+    back = spark.read.schema(schema).parquet(path)
+    assert sorted(tuple(r) for r in back.collect()) == [
+        (1, "track 1", "0012"),
+        (2, "UPDATED", "0012"),
+        (3, "track 3", "0012"),
+    ]
+
+
+def test_upsert_partitioned_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is an option of the upsert's own
+    write: the session's ``partitionOverwriteMode`` is never set, not
+    even temporarily, so it cannot leak into a concurrent write."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "fact")
+    write_partitioned(
+        spark.createDataFrame([(1, "a", "p1"), (1, "b", "p2")], _KEYED),
+        path,
+        ["playlist_id"],
+    )
+    schema = spark.createDataFrame([], _KEYED).schema
+    before = spark.conf.get(key)
+    sets: list[tuple] = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        sets.append((k, v))
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    upsert_partitioned(
+        spark.createDataFrame([(1, "new", "p1")], _KEYED),
+        path,
+        ["playlist_id", "track_number"],
+        "playlist_id",
+        schema,
+    )
+    assert [k for k, _ in sets if k == key] == []
+    assert spark.conf.get(key) == before
+    # p2 untouched, p1 replaced: the per-write dynamic mode still applies
+    back = spark.read.schema(schema).parquet(path)
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "b", "p2"), (1, "new", "p1")]
+
+
+def test_overwrite_concurrent_with_upsert_replaces_whole_table(spark, tmp_path):
+    """A plain partitioned overwrite running while an upsert writes
+    stays a static overwrite: it replaces every partition of its own
+    table, keeping none of the old ones."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    schema = spark.createDataFrame([], _KEYED).schema
+    target = str(tmp_path / "target")
+    write_partitioned(
+        spark.createDataFrame([(n, "old", f"p{n % 8}") for n in range(64)], _KEYED),
+        target,
+        ["playlist_id"],
+    )
+    upd = spark.createDataFrame([(n, "upd", f"p{n % 8}") for n in range(0, 64, 2)], _KEYED)
+    for i in range(3):
+        other = str(tmp_path / f"other{i}")
+        write_partitioned(
+            spark.createDataFrame([(1, "old", "a"), (2, "old", "b")], _KEYED),
+            other,
+            ["playlist_id"],
+        )
+        replacement = spark.createDataFrame([(3, "new", "c")], _KEYED)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            up = pool.submit(
+                upsert_partitioned,
+                upd,
+                target,
+                ["playlist_id", "track_number"],
+                "playlist_id",
+                schema,
+            )
+            ow = pool.submit(write_partitioned, replacement, other, ["playlist_id"])
+            up.result(timeout=300)
+            ow.result(timeout=300)
+        assert _partition_dirs(other) == ["playlist_id=c"]
+        back = spark.read.schema(schema).parquet(other)
+        assert [tuple(r) for r in back.collect()] == [(3, "new", "c")]
+    merged = spark.read.schema(schema).parquet(target)
+    assert merged.count() == 64
+    assert merged.filter(F.col("track_name") == "upd").count() == 32
